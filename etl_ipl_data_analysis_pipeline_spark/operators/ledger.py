@@ -79,17 +79,25 @@ def mark_stage(
     )
 
 
-def ingest_new(ledger: DataFrame, new_keys: DataFrame, key_col: str = "file_key") -> DataFrame:
-    """L2/L3: append never-seen keys as ingested=true rows (idempotent —
-    existing keys are excluded by the anti-join first, mirroring the
-    head_object skip at lamda_function.py:31-37)."""
+def ingest_new(
+    ledger: DataFrame,
+    new_keys: DataFrame,
+    key_col: str = "file_key",
+    stages: tuple[str, ...] = ("ingested",),
+) -> DataFrame:
+    """L2/L3: append never-seen keys as new rows with ``stages`` true and
+    every other stage false (idempotent — existing keys are excluded by the
+    anti-join first, mirroring the head_object skip at
+    lamda_function.py:31-37; their rows are left as they are).
+
+    A runner that completes several stages for its batch before it commits
+    passes them all here (``run_ingest`` writes its keys already marked
+    through ``transformed``): one anti-join + union instead of one
+    ``mark_stage`` join per stage, with the same resulting rows."""
     fresh = discover_new_files(new_keys.select(key_col).distinct(), ledger, key_col)
     rows = fresh.select(
         key_col,
-        F.lit(True).alias("ingested"),
-        F.lit(False).alias("crawled"),
-        F.lit(False).alias("transformed"),
-        F.lit(False).alias("loaded"),
+        *[F.lit(s in stages).alias(s) for s in STAGES],
         F.current_timestamp().alias("updated_at"),
     )
     return ledger.unionByName(rows)

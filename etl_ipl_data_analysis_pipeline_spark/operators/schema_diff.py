@@ -19,11 +19,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
 
+# Row shape of a schema registry table (a union of snapshots). Readers pass
+# it to spark.read.schema(...) so loading the registry infers nothing.
+REGISTRY_SCHEMA = "version_id long, name string, type string"
+
+
 def schema_snapshot(spark: SparkSession, df: DataFrame, version_id: int) -> DataFrame:
     """Snapshot a DataFrame's schema as (version_id, name, type) rows —
     replaces the Glue catalog version record (compare_schema.py:107-111)."""
     rows = [(version_id, name, dtype) for name, dtype in spark_schema_to_rows(df.schema)]
-    return spark.createDataFrame(rows, "version_id long, name string, type string")
+    return spark.createDataFrame(rows, REGISTRY_SCHEMA)
 
 
 def schema_diff(new: DataFrame, old: DataFrame) -> DataFrame:
@@ -80,9 +85,11 @@ def retain_versions(snapshots: DataFrame, n: int = 5) -> DataFrame:
     return snapshots.join(F.broadcast(keep), "version_id", "left_semi")
 
 
-def drift_report(diff: DataFrame) -> str:
+def drift_report(diff: DataFrame) -> str | None:
     """Human-readable drift message (compare_schema.py:40-43,56-63's SNS
-    payload). Driver-side by design — the diff itself is tiny."""
+    payload), or None when the diff is empty. Driver-side by design — the
+    diff itself is tiny, and one collect both decides whether there is
+    drift and builds the message."""
     lines = [
         f"- {r['change']}: {r['name']}"
         + (
@@ -92,7 +99,7 @@ def drift_report(diff: DataFrame) -> str:
         )
         for r in diff.collect()
     ]
-    return "schema drift detected:\n" + "\n".join(lines) if lines else "no drift"
+    return "schema drift detected:\n" + "\n".join(lines) if lines else None
 
 
 def spark_schema_to_rows(schema: StructType) -> list[tuple[str, str]]:

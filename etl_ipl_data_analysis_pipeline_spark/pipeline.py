@@ -14,7 +14,7 @@ import os
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .io import (
     expand_zip,
@@ -28,13 +28,15 @@ from .io import (
 from .io import read_json as _read_json
 from .operators.flatten import flatten
 from .operators.ledger import (
+    LEDGER_SCHEMA,
     discover_new_files,
     empty_ledger,
     ingest_new,
-    mark_stage,
+    mark_stage,  # unused here; kept so perfbench/tracing.py can wrap pipeline.mark_stage
     strip_extension,
 )
 from .operators.schema_diff import (
+    REGISTRY_SCHEMA,
     drift_report,
     schema_diff,
     schema_snapshot,
@@ -103,8 +105,9 @@ def _mtime_watermark(
 def _load_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     # recover_swapped repairs a swap torn by a crash before declaring the
     # ledger absent — an absent-looking ledger would re-ingest everything.
+    # The pinned schema spares the parquet footer-inference job per run.
     if recover_swapped(spark, ledger_path):
-        return spark.read.parquet(ledger_path)
+        return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
     return empty_ledger(spark)
 
 
@@ -306,14 +309,13 @@ def run_ingest(
     if schema_registry_path is not None:
         new_snap_rows = schema_snapshot(spark, flat, version_id=0).select("name", "type")
         if recover_swapped(spark, schema_registry_path):
-            registry = spark.read.parquet(schema_registry_path)
+            registry = spark.read.schema(REGISTRY_SCHEMA).parquet(schema_registry_path)
             latest = registry.agg(F.max("version_id")).first()[0]
             old = registry.filter(F.col("version_id") == latest).select("name", "type")
-            diff = schema_diff(new_snap_rows, old)
-            if not diff.isEmpty():
-                drift_msg = drift_report(diff)
-                if on_drift == "block":
-                    raise RuntimeError(drift_msg)
+            # one collect of the diff: None when the schemas match
+            drift_msg = drift_report(schema_diff(new_snap_rows, old))
+            if drift_msg and on_drift == "block":
+                raise RuntimeError(drift_msg)
             next_version = latest + 1 if drift_msg else latest
             if drift_msg:
                 updated = registry.unionByName(
@@ -326,8 +328,13 @@ def run_ingest(
             )
 
     # 5. write (SNK1). Append — each run adds only its new files' rows.
-    rows_written = flat.count()
-    write_parquet(flat, out_dir, mode="append")
+    # The flatten runs once: the row count is an Observation gathered by
+    # the write job itself, read only after the write has committed.
+    observed = Observation()
+    write_parquet(
+        flat.observe(observed, F.count(F.lit(1)).alias("rows")), out_dir, mode="append"
+    )
+    rows_written = observed.get["rows"]
     if cached_raw is not None:
         cached_raw.unpersist()  # executor memory back; batch is re-readable
     if compact_after:
@@ -337,12 +344,12 @@ def run_ingest(
         # torn commit replays before this run's bin-packing plan is made
         compact_table(spark, out_dir, target_file_mb=compact_target_mb)
 
-    # 6. ledger update (L2/L3): new keys ingested, then marked through
-    # crawled/transformed (this runner performs both stages).
+    # 6. ledger update (L2/L3), after the data is durable: the new keys
+    # are appended already marked through crawled/transformed (this runner
+    # performs both stages) — one anti-join + union, no per-stage join.
+    # The ledger stays distributed; _save_small_table swaps it in whole.
     keys = fresh.select("file_key")
-    ledger = ingest_new(ledger, keys)
-    ledger = mark_stage(ledger, keys, "crawled")
-    ledger = mark_stage(ledger, keys, "transformed")
+    ledger = ingest_new(ledger, keys, stages=("ingested", "crawled", "transformed"))
     _save_small_table(ledger, ledger_path)
     fresh.unpersist()
 

@@ -49,7 +49,7 @@ def test_incremental_batch_appends_only_new(spark, tmp_path, pipe_args):
     })
     run_ingest(spark, z1, **pipe_args)
     r = run_ingest(spark, z2, **pipe_args)
-    assert r.processed_files == 1
+    assert (r.processed_files, r.rows_written) == (1, 1)
     assert spark.read.parquet(pipe_args["out_dir"]).count() == 2
 
 
@@ -108,6 +108,7 @@ def test_quarantine_diverts_corrupt_files(spark, tmp_path, pipe_args):
     assert not r.skipped
     assert r.quarantined == 1
     assert r.rows_written == 1  # only the clean doc reached the sink
+    assert spark.read.parquet(pipe_args["out_dir"]).count() == r.rows_written
     q = spark.read.parquet(qdir)
     assert q.count() == 1 and q.columns == ["path", "raw"]
     # second run: both files are ledgered (incl. the quarantined one), no rework
@@ -212,3 +213,76 @@ def test_compact_after_bounds_small_files(spark, tmp_path, pipe_args):
         r["id"] for r in spark.read.parquet(pipe_args["out_dir"]).collect()
     )
     assert got == sorted(10 * i + j for i in range(3) for j in range(4))
+
+
+# --- one data pass, one-step ledger commit ---------------------------------
+
+
+def _match(i, deliveries):
+    """A cricsheet-like match: flattens to ``deliveries`` x 2 teams rows."""
+    balls = [{"over": o, "runs": o % 4} for o in range(deliveries)]
+    return {
+        "info": {"match_id": i, "teams": ["a", "b"]},
+        "innings": [{"team": "a", "deliveries": balls}],
+    }
+
+
+def test_observed_row_count_zero_row_batch(spark, tmp_path, pipe_args):
+    # documents that are empty top-level arrays flatten to no rows; the
+    # write still runs, so the observation reports 0 instead of blocking
+    schema = "id long, v string"
+    z1 = make_zip(tmp_path, "b1.zip", {"f1.json": [{"id": 1, "v": "a"}]})
+    z2 = make_zip(tmp_path, "b2.zip", {"e1.json": [], "e2.json": []})
+    run_ingest(spark, z1, **pipe_args, json_schema=schema)
+    r = run_ingest(spark, z2, **pipe_args, json_schema=schema)
+    assert (r.processed_files, r.rows_written, r.skipped) == (2, 0, False)
+    assert spark.read.parquet(pipe_args["out_dir"]).count() == 1
+
+
+def test_ledger_commit_marks_stages_and_same_schema_keeps_registry(spark, tmp_path, pipe_args):
+    import pyspark.sql.functions as F
+
+    # two members with one basename land on one file and one ledger key
+    z1 = make_zip(tmp_path, "b1.zip", {
+        "day1/m1.json": _match(1, 2), "day2/m1.json": _match(1, 2), "m2.json": _match(2, 3),
+    })
+    z2 = make_zip(tmp_path, "b2.zip", {"m3.json": _match(3, 2)})
+    cold = run_ingest(spark, z1, **pipe_args)
+    assert cold.drift is None  # first snapshot, nothing to compare against
+    registry = spark.read.parquet(pipe_args["schema_registry_path"])
+    newest = registry.agg(F.max("version_id")).first()[0]
+    incr = run_ingest(spark, z2, **pipe_args)
+    assert incr.drift is None  # same schema: no report, no new version
+    registry = spark.read.parquet(pipe_args["schema_registry_path"])
+    assert registry.agg(F.max("version_id")).first()[0] == newest
+
+    ledger = spark.read.parquet(pipe_args["ledger_path"]).collect()
+    assert sorted(r["file_key"] for r in ledger) == ["m1", "m2", "m3"]
+    for r in ledger:
+        assert (r["ingested"], r["crawled"], r["transformed"], r["loaded"]) == (
+            True, True, True, False,
+        ), r
+        assert r["updated_at"] is not None
+
+
+def test_job_count_per_run(spark, tmp_path, pipe_args):
+    """Spark jobs started by a cold, a no-op and an incremental run (same
+    schema, so no registry rewrite). The flattened batch runs once, in the
+    write; the control tables are read with pinned schemas (no footer
+    inference job); the ledger commit is one anti-join + union. A second
+    data pass or an inference job shows up here as an extra job."""
+    sc = spark.sparkContext
+    z1 = make_zip(tmp_path, "b1.zip", {f"m{i}.json": _match(i, 4) for i in range(3)})
+    z2 = make_zip(tmp_path, "b2.zip", {f"m{i}.json": _match(i, 4) for i in range(4)})
+    counts = {}
+    try:
+        for name, z in (("cold", z1), ("noop", z1), ("incr", z2)):
+            group = f"test-job-count-{name}"
+            sc.setJobGroup(group, group)
+            run_ingest(spark, z, **pipe_args)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            counts[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {"cold": 14, "noop": 4, "incr": 18}, counts
